@@ -84,7 +84,7 @@ elif job == "politeness":
     # skew (20% on one host), budget 16 — range shuffle + Arrow cumcount
     # + broadcast offsets
     n_rows = 3_000_000
-    from web_scraper_spark.operators.politeness import assign_rounds, release_rounds
+    from web_scraper_spark.operators.politeness import assign_rounds
     frontier = spark.range(n_rows).select(
         F.when(F.col("id") % 5 == 0, F.lit("hot.test")).otherwise(
             F.concat(F.lit("h"), (F.col("id") % 20000).cast("string"), F.lit(".test"))
@@ -99,9 +99,9 @@ elif job == "politeness":
         # release), matching what one crawl depth pays — the r3 cache()
         # form let trials 2-3 hit trial 1's cache via the CacheManager's
         # canonical-plan lookup, flattering min-of-3 by ~2.5x
-        out = assign_rounds(frontier, 16, "range")
+        out, release = assign_rounds(frontier, 16)
         assert out.count() == n_rows
-        release_rounds(out)
+        release()
     best = measure(run)
     print(json.dumps({"job": job, "cpus": cpus, "items": n_rows, "sec": best,
                       "per_sec": n_rows / best}))
@@ -126,11 +126,9 @@ elif job == "minhash":
     ).repartition(256).cache()
     docs.count()
     def run():
-        bands = minhash_bands(docs)
+        bands, release = minhash_bands(docs)
         assert bands.count() == 8 * n_docs
-        # free the checkpoint between trials (fresh-state pricing)
-        from web_scraper_spark.operators.minhash import release_bands
-        release_bands(bands)
+        release()  # free the checkpoint between trials (fresh-state pricing)
     best = measure(run)
     print(json.dumps({"job": job, "cpus": cpus, "items": n_docs, "sec": best,
                       "per_sec": n_docs / best}))

@@ -34,8 +34,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="use the hermetic synthetic web with N domains instead of --seeds-csv")
     p.add_argument("--workdir", required=True)
     p.add_argument("--politeness-budget", type=int, default=None)
-    p.add_argument("--politeness-method", choices=["window", "range"], default="range",
-                   help="range (default) is the skew-safe scheduler; window is the semantics baseline")
     p.add_argument("--use-robots", action="store_true",
                    help="robots.txt enforcement; with --live the rules are fetched per new host (pre-pass), hermetic mode reads them off the web fixture")
     p.add_argument("--robots-agent", default="*",
@@ -96,7 +94,6 @@ def main(argv: list[str] | None = None) -> int:
             spark, seeds, web, args.workdir,
             max_age_s=args.recrawl_max_age,
             politeness_budget=args.politeness_budget,
-            politeness_method=args.politeness_method,
             dedup_contacts=args.dedup,
             max_depth=args.max_depth,
             use_robots=args.use_robots,
@@ -123,7 +120,6 @@ def main(argv: list[str] | None = None) -> int:
         None,
         workdir=args.workdir,
         politeness_budget=args.politeness_budget,
-        politeness_method=args.politeness_method,
         dedup_contacts=args.dedup,
         resume=args.resume,
         max_depth=args.max_depth,

@@ -59,7 +59,7 @@ def export_corpus(spark, data_dir: str, outdir: str, shards: int = 8) -> dict:
     n_exact = reps.count()
 
     # 2) near-dup clusters over the survivors; keep the longest member
-    bands = minhash_bands(reps)
+    bands, release = minhash_bands(reps)
     pairs = band_pairs(bands)
     cc = connected_components(
         reps.select(F.col("doc_id").alias("id")),
@@ -78,8 +78,7 @@ def export_corpus(spark, data_dir: str, outdir: str, shards: int = 8) -> dict:
         .select("doc_id")
     )
     survivors = reps.join(keepers, "doc_id")
-    from web_scraper_spark.operators.minhash import release_bands
-    release_bands(bands)
+    release()
     n_neardup = survivors.count()
 
     # 3) Gopher quality gate

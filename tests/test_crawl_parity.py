@@ -113,17 +113,6 @@ def test_politeness_budget_same_final_state(spark, fixture_web, tmp_path):
     assert _doc_rows(result.company_records) == _oracle_docs(oracle)
 
 
-def test_politeness_range_method_equals_window(spark, fixture_web, tmp_path):
-    seeds, web, names, _ = fixture_web
-    a = _run(spark, fixture_web, tmp_path / "rw", politeness_budget=4,
-             politeness_method="window")
-    b = _run(spark, fixture_web, tmp_path / "rr", politeness_budget=4,
-             politeness_method="range")
-    ga = sorted((r["round"], r.depth, r.seed_idx, r.url) for r in a.crawl_log.collect())
-    gb = sorted((r["round"], r.depth, r.seed_idx, r.url) for r in b.crawl_log.collect())
-    assert ga == gb
-
-
 def test_resume_identical_final_state(spark, fixture_web, tmp_path):
     """Kill after round 0's commit; resume; final state must equal the
     uninterrupted run (SURVEY.md §5.2.6)."""

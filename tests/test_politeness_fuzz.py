@@ -20,18 +20,27 @@ SCHEMA = (
 )
 
 
+def _collect_range(frontier, budget):
+    from web_scraper_spark.operators.politeness import assign_rounds_range
+
+    out, release = assign_rounds_range(frontier, budget)
+    rows = out.collect()
+    release()
+    return rows
+
+
 def _assign_equal(spark, rows, budgets, n_part=7):
-    from web_scraper_spark.operators.politeness import assign_rounds
+    from web_scraper_spark.operators.politeness import assign_rounds_window
 
     frontier = spark.createDataFrame(rows, SCHEMA).repartition(n_part)
     for budget in budgets:
         w = {
             (r["url"], r["seed_idx"]): r["round_offset"]
-            for r in assign_rounds(frontier, budget, "window").collect()
+            for r in assign_rounds_window(frontier, budget).collect()
         }
         g = {
             (r["url"], r["seed_idx"]): r["round_offset"]
-            for r in assign_rounds(frontier, budget, "range").collect()
+            for r in _collect_range(frontier, budget)
         }
         assert w == g, f"budget={budget}: {len(w)} rows"
         # a single host must also drain in contiguous rounds 0..ceil(n/b)-1
@@ -103,24 +112,21 @@ def test_hosts_straddling_many_boundaries(spark):
     list(_assign_equal(spark, rows, budgets=(5,), n_part=12))
     # and the plan-level invariant: with 12 range partitions and 3 heavy
     # hosts, the nonzero-offset rows stay <= partitions + hosts
-    out = assign_rounds_range(frontier, 5)
+    out, release = assign_rounds_range(frontier, 5)
     assert out.count() == len(rows)
+    release()
 
 
 @pytest.mark.parametrize("budget", [1, 2])
 def test_empty_and_tiny_frontiers(spark, budget):
     """Degenerate sizes around the budget: 0, 1, and budget+1 rows."""
-    from web_scraper_spark.operators.politeness import assign_rounds
-
     empty = spark.createDataFrame([], SCHEMA)
-    assert assign_rounds(empty, budget, "range").count() == 0
+    assert _collect_range(empty, budget) == []
 
     tiny = [_row("solo.test", i) for i in range(budget + 1)]
     got = {
         r["seed_idx"]: r["round_offset"]
-        for r in assign_rounds(
-            spark.createDataFrame(tiny, SCHEMA), budget, "range"
-        ).collect()
+        for r in _collect_range(spark.createDataFrame(tiny, SCHEMA), budget)
     }
     # seed_idx order drains first-come: last row spills into round 1
     assert got == {i: i // budget for i in range(budget + 1)}

@@ -8,6 +8,21 @@ from web_scraper_spark.plans.crawl import run_crawl
 from web_scraper_spark.sources.synthetic_web import build_web, web_host_df
 
 
+def _collect_window(frontier, budget):
+    from web_scraper_spark.operators.politeness import assign_rounds_window
+
+    return assign_rounds_window(frontier, budget).collect()
+
+
+def _collect_range(frontier, budget):
+    from web_scraper_spark.operators.politeness import assign_rounds_range
+
+    out, release = assign_rounds_range(frontier, budget)
+    rows = out.collect()
+    release()
+    return rows
+
+
 def test_custom_priority_matches_oracle(spark, tmp_path):
     seeds, web = build_web(15)
     webdf = web_host_df(spark, 15)
@@ -58,7 +73,6 @@ def test_politeness_tiebreak_is_raw_url_on_both_sides(spark):
     (frontier_sort_key). The fixture pair flips order between raw and
     canonical forms ('HTTPS://...' sorts before 'http://...' raw, after
     it canonicalized), so a divergence would misassign rounds."""
-    from web_scraper_spark.operators.politeness import assign_rounds
     from web_scraper_spark.oracle.simulator import canonicalize, frontier_sort_key
 
     rows = [
@@ -81,11 +95,11 @@ def test_politeness_tiebreak_is_raw_url_on_both_sides(spark):
             sorted(rows, key=lambda r: frontier_sort_key(r[6], r[3], r[0]))
         )
     }
-    for method in ("window", "range"):
-        got = {
-            r["url"]: r["round_offset"]
-            for r in assign_rounds(frontier, 1, method).collect()
-        }
+    for method, rows in (
+        ("window", _collect_window(frontier, 1)),
+        ("range", _collect_range(frontier, 1)),
+    ):
+        got = {r["url"]: r["round_offset"] for r in rows}
         assert got == expected, method
 
 
@@ -94,8 +108,6 @@ def test_window_equals_range_property(spark):
     on randomized frontiers (hot hosts, duplicate priorities, many
     budgets) — guards the r2 default flip."""
     import random
-
-    from web_scraper_spark.operators.politeness import assign_rounds
 
     rng = random.Random(1234)
     rows = []
@@ -120,11 +132,11 @@ def test_window_equals_range_property(spark):
     for budget in (1, 3, 17):
         w = {
             (r["url"], r["seed_idx"]): r["round_offset"]
-            for r in assign_rounds(frontier, budget, "window").collect()
+            for r in _collect_window(frontier, budget)
         }
         g = {
             (r["url"], r["seed_idx"]): r["round_offset"]
-            for r in assign_rounds(frontier, budget, "range").collect()
+            for r in _collect_range(frontier, budget)
         }
         assert w == g, budget
 
@@ -136,8 +148,6 @@ def test_range_cumcount_carry_across_arrow_batches(spark):
     unless forced). Force 64-row batches over a 1,500-row hot host and
     pin equality with the window baseline."""
     import random
-
-    from web_scraper_spark.operators.politeness import assign_rounds
 
     rng = random.Random(77)
     rows = []
@@ -164,13 +174,13 @@ def test_range_cumcount_carry_across_arrow_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         got = {
             (r["url"], r["seed_idx"]): r["round_offset"]
-            for r in assign_rounds(frontier, 7, "range").collect()
+            for r in _collect_range(frontier, 7)
         }
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     want = {
         (r["url"], r["seed_idx"]): r["round_offset"]
-        for r in assign_rounds(frontier, 7, "window").collect()
+        for r in _collect_window(frontier, 7)
     }
     assert got == want
 

@@ -76,10 +76,9 @@ def test_stream_matches_batch_twin(spark, tmp_path):
             F.lit(None).cast("string").alias("caption"),
             F.lit(float(b)).alias("priority"),
         )
-        expected += [
-            (b, r.url, r.round_offset)
-            for r in assign_rounds(df, 2).collect()
-        ]
+        assigned, release = assign_rounds(df, 2)
+        expected += [(b, r.url, r.round_offset) for r in assigned.collect()]
+        release()
     assert sorted(got) == sorted(expected)
     # the hot host actually split into politeness rounds in batch 0
     assert {ro for (b, u, ro) in got if b == 0 and "hot.test" in u} == {0, 1}

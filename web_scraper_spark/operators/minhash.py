@@ -22,8 +22,12 @@ over the per-doc array.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from web_scraper_spark.session import materialize
 
 N_MINHASH = 8
 
@@ -49,15 +53,17 @@ def words_of(col: Column) -> Column:
 
 def minhash_bands(
     d: DataFrame, doc_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_col, band, minhash) rows for the corpus, materialized once.
+) -> tuple[DataFrame, Callable[[], None]]:
+    """(doc_col, band, minhash) rows for the corpus, materialized once;
+    returns the ``session.materialize`` pair ``(bands, release)``.
 
     The eager localCheckpoint matters because consumers join the band
     table against itself (or a filtered view): without it the
     broadcast-side plan re-runs the shingle+md5 subtree (measured
     4.2 -> 2.5 s at sf0.1). The table is (id, band, minhash) only —
     never document text — so the checkpoint stays small at any corpus
-    size."""
+    size. ``DataFrame.unpersist()`` cannot free it; call ``release()``
+    once the bands are durably consumed."""
     src = d.select(doc_col, text_col)
     # r6 scan-parallelism floor (optimization guide §6): the per-shingle
     # md5 below is far heavier than the scan's byte cost, and a small
@@ -88,36 +94,14 @@ def minhash_bands(
             for i, (a, b) in enumerate(BAND_COEF)
         ]
     )
-    out = mins.select(
-        doc_col,
-        F.posexplode(
-            F.array(*[F.col(f"m{i}") for i in range(N_MINHASH)])
-        ).alias("band", "minhash"),
-    ).localCheckpoint(eager=True)
-    # r6 (ADVICE r5): DataFrame.unpersist() is a no-op on a
-    # localCheckpoint'ed frame (checkpoint RDDs are not in the cache
-    # manager), so callers that price fresh state per trial/batch need a
-    # real handle. Reuse the politeness release-handle pattern: grab the
-    # checkpointed JVM RDD off the LogicalRDD leaf now; release_bands()
-    # frees the blocks deterministically. Falls back to ContextCleaner
-    # GC if Spark internals move.
-    from web_scraper_spark.operators.politeness import PolitenessCheckpoint
-
-    try:
-        leaf = out._jdf.queryExecution().analyzed().collectLeaves().apply(0)
-        out._bands_ckpt = PolitenessCheckpoint(leaf.rdd())
-    except Exception:  # pragma: no cover — Spark-internals drift
-        out._bands_ckpt = PolitenessCheckpoint()
-    return out
-
-
-def release_bands(bands: DataFrame) -> None:
-    """Free the localCheckpoint blocks behind a ``minhash_bands`` result
-    (``DataFrame.unpersist()`` cannot — see note above). Call only once
-    the bands are durably consumed; later actions fail loudly."""
-    handle = getattr(bands, "_bands_ckpt", None)
-    if handle is not None:
-        handle.release()
+    return materialize(
+        mins.select(
+            doc_col,
+            F.posexplode(
+                F.array(*[F.col(f"m{i}") for i in range(N_MINHASH)])
+            ).alias("band", "minhash"),
+        )
+    )
 
 
 def band_pairs(bands: DataFrame, doc_col: str = "doc_id") -> DataFrame:

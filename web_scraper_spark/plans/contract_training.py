@@ -135,7 +135,7 @@ _SQL_MH_UNION = " UNION ALL ".join(
 )
 def dedup_minhash_lsh(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    mh = _minhash_bands(d)
+    mh, _ = _minhash_bands(d)  # lazy result: the ContextCleaner frees the blocks
     a = mh.alias("a")
     b = mh.alias("b")
     return (
@@ -3253,7 +3253,7 @@ def dedup_incremental(spark, sf_dir):
     # One flat-column minhash pass over the whole corpus, materialized
     # once (shared _minhash_bands helper).  In production the old side
     # would be read back from its stored band table instead.
-    mh = _minhash_bands(d)
+    mh, _ = _minhash_bands(d)  # lazy result: the ContextCleaner frees the blocks
     new = mh.where(F.col("doc_id") % 3 == 0).alias("n")
     old = mh.where(F.col("doc_id") % 3 != 0).alias("o")
     # r6: dedupe (new, old) pairs with a plain two-key groupBy FIRST,

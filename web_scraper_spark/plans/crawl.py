@@ -53,27 +53,6 @@ FRONTIER_SCHEMA = (
     "caption string, priority double, round_offset long"
 )
 
-# Optional phase profiling (optimization-guide §1.5): set
-# SPARK_GRAFT_CRAWL_PROFILE=1 to print per-phase driver wall times.
-_PROFILE = bool(os.environ.get("SPARK_GRAFT_CRAWL_PROFILE"))
-
-
-class _phase:
-    _acc: dict[str, list[float]] = {}
-
-    def __init__(self, name: str):
-        self.name = name
-
-    def __enter__(self):
-        self.t0 = time.monotonic()
-
-    def __exit__(self, *exc):
-        if _PROFILE:
-            dt = time.monotonic() - self.t0
-            self._acc.setdefault(self.name, []).append(dt)
-            print(f"[crawl-profile] {self.name}: {dt:.3f}s", flush=True)
-
-
 def _parquet_num_rows(path: str) -> int:
     """Total row count of a just-written parquet dir from file footers —
     a driver-side metadata read (no Spark job)."""
@@ -249,7 +228,6 @@ def run_crawl(
     *,
     workdir: str,
     politeness_budget: int | None = None,
-    politeness_method: str = "range",
     dedup_contacts: bool = False,
     resume: bool = False,
     max_depth: int = 1,
@@ -450,11 +428,7 @@ def run_crawl(
         scheduling: blocked URLs consume no politeness slots and never
         reach the crawl log (url_seen keeps them — they were
         discovered)."""
-        handles: list = []
-        assigned = assign_rounds(
-            _robots_filter(df), politeness_budget, politeness_method,
-            release_handle=handles,
-        )
+        assigned, release = assign_rounds(_robots_filter(df), politeness_budget)
         try:
             path = frontier_t.write_data(assigned, partition_by=["round_offset"])
         finally:
@@ -462,10 +436,8 @@ def run_crawl(
             # never accumulates pinned frontier copies (VERDICT r3 nit) —
             # in finally so a failed write doesn't leak the checkpoint
             # either (the crawl resumes from the last committed round and
-            # re-runs assign_rounds). Explicit handle (ADVICE r4), not the
-            # result-attribute path.
-            for h in handles:
-                h.release()
+            # re-runs assign_rounds)
+            release()
         out: dict[int, str] = {}
         for name in os.listdir(path):
             if name.startswith("round_offset="):
@@ -515,13 +487,12 @@ def run_crawl(
         for t in (frontier_t, log_t, extracted_t, records_t, images_t,
                   discovered_t, seen.table, robots_t):
             t.reset()
-        with _phase("seed_frontier"):
-            seeds_df = _with_priority(
-                _seed_frontier_from_table(spark, seed_table)
-                if seed_table is not None
-                else _seed_frontier(spark, seeds),
-                priority_expr,
-            ).cache()
+        seeds_df = _with_priority(
+            _seed_frontier_from_table(spark, seed_table)
+            if seed_table is not None
+            else _seed_frontier(spark, seeds),
+            priority_expr,
+        ).cache()
         if ingest_sitemaps and robots_rules is not None and web is not None:
             # graft: robots-advertised sitemaps seed extra depth-0 pages,
             # attributed to the seed of the SAME host (hosts with no seed
@@ -588,10 +559,8 @@ def run_crawl(
             else:
                 seen.add(seeds_df.select("url"))
         else:
-            with _phase("seed_discovered_append"):
-                discovered_t.append(seeds_df.select("url"))
-        with _phase("stage_depth0"):
-            active_dirs = _stage_depth(seeds_df)
+            discovered_t.append(seeds_df.select("url"))
+        active_dirs = _stage_depth(seeds_df)
         staged_dirs = []
         round_no = 0
         depth_now = 0
@@ -600,8 +569,7 @@ def run_crawl(
         if not active_dirs:
             if not staged_dirs:
                 break
-            with _phase("stage_depth"):
-                active_dirs = _stage_depth(spark.read.parquet(*staged_dirs))
+            active_dirs = _stage_depth(spark.read.parquet(*staged_dirs))
             staged_dirs = []
             depth_now += 1  # staged rows are always depth_now + 1
             # robots filtering may have emptied the whole staged depth —
@@ -640,8 +608,7 @@ def run_crawl(
         log_w = Window.partitionBy("round", "depth", "seed_idx", "url").orderBy(
             "partition_id"
         )
-        with _phase("log_append"):
-         log_t.append(
+        log_t.append(
             fetched.select(
                 F.lit(round_no).alias("round"),
                 F.col("depth"),
@@ -656,7 +623,7 @@ def run_crawl(
                 F.lit(float(time.time())).alias("ts"),
             ).withColumn("attempt_no", F.row_number().over(log_w)),
             tag=None,
-         )
+        )
         # ---- optional WARC archive of this round's fetches -------------
         # Reads the cached `fetched` like the log/extract actions above;
         # one .warc.gz per partition, idempotent under resume (the round
@@ -711,17 +678,15 @@ def run_crawl(
         # ---- log extracted records (merged once after the loop: the
         # per-round log is what checkpoints; the final MERGE is a single
         # keyed aggregation instead of rounds x full-table rewrites) ----
-        with _phase("extract_append"):
-            extracted_t.append(
-                extracted.select(
-                    "depth", "seed_idx", "seed_url",
-                    "phone_numbers", "social_media_links", "addresses",
-                )
+        extracted_t.append(
+            extracted.select(
+                "depth", "seed_idx", "seed_url",
+                "phone_numbers", "social_media_links", "addresses",
             )
+        )
 
         # ---- land images (graft route; reference drops these) ---------
-        with _phase("images"):
-         if not image_ok.isEmpty():
+        if not image_ok.isEmpty():
             landed = land_images(image_ok.select("url", "caption", "body"))
             existing = images_t.read()
             if existing is not None:
@@ -778,8 +743,7 @@ def run_crawl(
             # Appended UNCONDITIONALLY: a pre-write isEmpty() probe costs
             # the same driver job as writing an empty delta, and nonempty
             # rounds (the common case) save the probe entirely
-            with _phase("discovered_append"):
-                discovered_t.append(discovered.select("url"))
+            discovered_t.append(discovered.select("url"))
         next_depth = _with_priority(
             discovered.select(
                 "url", "host",
@@ -788,21 +752,20 @@ def run_crawl(
             ),
             priority_expr,
         )
-        with _phase("stage_next"):
-            # one delta dir per producing round — staged rows are written
-            # exactly once, never rewritten. Written unconditionally, then
-            # emptiness is read off the parquet footers driver-side (~ms):
-            # the old isEmpty() pre-probe was a full extra Spark job per
-            # round re-walking the discovery subtree (guide §1.2 — fewer
-            # passes). An empty delta dir is uncommitted, so removing it
-            # leaves no orphan.
-            path = frontier_t.write_data(next_depth)
-            if _parquet_num_rows(path) > 0:
-                staged_dirs.append(path)
-            else:
-                import shutil
+        # one delta dir per producing round — staged rows are written
+        # exactly once, never rewritten. Written unconditionally, then
+        # emptiness is read off the parquet footers driver-side (~ms):
+        # the old isEmpty() pre-probe was a full extra Spark job per
+        # round re-walking the discovery subtree (guide §1.2 — fewer
+        # passes). An empty delta dir is uncommitted, so removing it
+        # leaves no orphan.
+        path = frontier_t.write_data(next_depth)
+        if _parquet_num_rows(path) > 0:
+            staged_dirs.append(path)
+        else:
+            import shutil
 
-                shutil.rmtree(path, ignore_errors=True)
+            shutil.rmtree(path, ignore_errors=True)
 
         # ---- checkpoint: manifest-only commit (remaining round dirs +
         # staged deltas + resume metadata) under one tag ------------------
@@ -843,17 +806,16 @@ def run_crawl(
     # ---- post-loop housekeeping: compact the append-heavy tables so the
     # next epoch (or resume) reads one file set per table. The seen set
     # owns its compaction (exact mode dedups on (hash, url) there) -------
-    with _phase("compact"):
-        # four independent single-writer tables: overlap their compaction
-        # jobs so the tail tasks of one backfill the others' idle cores
-        # (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
+    # four independent single-writer tables: overlap their compaction
+    # jobs so the tail tasks of one backfill the others' idle cores
+    # (guide §2.6)
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [pool.submit(t.compact) for t in (log_t, extracted_t, discovered_t)]
-            futs.append(pool.submit(seen.compact))
-            for f in futs:
-                f.result()
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futs = [pool.submit(t.compact) for t in (log_t, extracted_t, discovered_t)]
+        futs.append(pool.submit(seen.compact))
+        for f in futs:
+            f.result()
     if expire_history:
         # reclaim expired history + its data dirs (Iceberg
         # expire_snapshots analog): every returned DataFrame reads a
@@ -861,16 +823,14 @@ def run_crawl(
         # preserved, so nothing observable changes — only disk. At
         # hundreds of politeness rounds the consumed round dirs are the
         # dominant leftover storage.
-        with _phase("expire"):
-            for t in (frontier_t, log_t, extracted_t, discovered_t,
-                      images_t, records_t, robots_t, seen.table):
-                t.expire_snapshots(keep_last=1)
+        for t in (frontier_t, log_t, extracted_t, discovered_t,
+                  images_t, records_t, robots_t, seen.table):
+            t.expire_snapshots(keep_last=1)
 
     # ---- one-shot records MERGE over the full extracted log ------------
-    with _phase("records_merge"):
-        all_extracted = extracted_t.read()
-        if all_extracted is not None and not all_extracted.isEmpty():
-            merge_company_records(records_t, _prepare_record_batch(all_extracted))
+    all_extracted = extracted_t.read()
+    if all_extracted is not None and not all_extracted.isEmpty():
+        merge_company_records(records_t, _prepare_record_batch(all_extracted))
 
     # ---- names side-input MERGE (SURVEY.md §3.2, scalars last) --------
     if names_rows:

@@ -15,8 +15,9 @@ The settings below are the ones that matter at both scales:
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -52,3 +53,34 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
+    """Eager ``localCheckpoint`` of ``df`` plus a one-shot ``release()``.
+
+    ``DataFrame.unpersist()`` is a no-op on a checkpointed frame (its
+    blocks live outside the cache manager), so the checkpointed JVM RDD is
+    taken off the plan's ``LogicalRDD`` leaf here, once, and ``release()``
+    unpersists it. Call ``release()`` only once the result is durably
+    consumed: the checkpoint truncated the lineage, so a later action on
+    the frame fails loudly instead of recomputing. A second ``release()``
+    raises, and so does a Spark version whose checkpoint leaf has moved —
+    a leak must never be silent."""
+    out = df.localCheckpoint(eager=True)
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    if leaves.size() != 1 or leaves.apply(0).nodeName() != "LogicalRDD":
+        raise RuntimeError(
+            "materialize: the checkpointed plan is not a single LogicalRDD "
+            "leaf; cannot take a release handle for its blocks"
+        )
+    jrdd = leaves.apply(0).rdd()
+    released = False
+
+    def release() -> None:
+        nonlocal released
+        if released:
+            raise RuntimeError("materialize: checkpoint already released")
+        released = True
+        jrdd.unpersist(True)
+
+    return out, release

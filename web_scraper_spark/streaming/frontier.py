@@ -62,18 +62,14 @@ def ingest_seed_stream(
             F.col("url").alias("seed_url"),
             F.lit(None).cast("string").alias("caption"),
         ).withColumn("priority", F.col("seed_idx").cast("double"))
-        handles: list = []
-        assigned = assign_rounds(
-            frontier, politeness_budget, release_handle=handles
-        )
+        assigned, release = assign_rounds(frontier, politeness_budget)
         try:
             table.append(assigned, tag=f"batch-{batch_id}")
         finally:
             # in finally: a failed/retried micro-batch re-runs land() with
             # a fresh checkpoint — without this the first attempt's blocks
-            # leak once per retry. Explicit handle (ADVICE r4).
-            for h in handles:
-                h.release()
+            # leak once per retry
+            release()
 
     return (
         novel.writeStream.foreachBatch(land)

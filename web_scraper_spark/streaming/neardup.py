@@ -55,16 +55,13 @@ def neardup_report(
     incoming doc: (doc_id, n_matches, first_match, is_neardup) — novel
     docs kept with n_matches = 0 (the left join), matching
     ``dedup_incremental``'s aggregate shape but total over the batch."""
-    # r6 (VERDICT r5 item 6): the history side joins SEPARATELY from the
-    # batch's internal self-join — the old union(old, new) before the
-    # join destroyed the stored side's bucketed output partitioning, so
-    # even a (band, minhash)-bucketed history table re-shuffled. Split,
-    # the stored side of the history join reads its buckets
-    # exchange-free (BucketedBandState + the plan test); the self-join
-    # is batch-scale. Values are identical: matches from strictly
-    # earlier batches and same-batch smaller ids are disjoint row sets
-    # whose distinct union this aggregates, and novel docs come back
-    # via the left join with n_matches = 0 exactly as before.
+    # the history side joins SEPARATELY from the batch's internal
+    # self-join: a union(old, new) before the join would destroy the
+    # stored side's output partitioning, so a (band, minhash)-bucketed
+    # history would still re-shuffle. Values are identical: matches from
+    # strictly earlier batches and same-batch smaller ids are disjoint
+    # row sets whose distinct union this aggregates, and novel docs come
+    # back via the left join with n_matches = 0.
     n = new_bands.alias("n")
     keys = (F.col("n.band") == F.col("o.band")) & (
         F.col("n.minhash") == F.col("o.minhash")
@@ -116,7 +113,7 @@ def land_batch(
     tag = f"batch-{batch_id}"
     if tag in band_table.tags():
         return  # both commits landed; a pure replay
-    mh = minhash_bands(batch_df)
+    mh, release = minhash_bands(batch_df)
     bands = mh.select(
         F.lit(batch_id).cast("long").alias("batch_id"), "doc_id", "band", "minhash"
     )
@@ -126,132 +123,7 @@ def land_batch(
             results.append(report, tag=tag)
         band_table.append(bands, tag=tag)
     finally:
-        from web_scraper_spark.operators.minhash import release_bands
-
-        release_bands(mh)
-
-
-class BucketedBandState:
-    """Band history laid out for the exchange-free per-batch join
-    (VERDICT r5 item 6): a catalog parquet table bucketed AND per-bucket
-    sorted by (band, minhash) — the join keys — and partitioned by
-    batch_id, plus an atomically-replaced sidecar manifest listing the
-    COMMITTED batch ids. ``neardup_report(new, state.read())`` then
-    plans a sort-merge join whose stored side reads pre-bucketed,
-    pre-sorted splits: no Exchange, no Sort — only the (small) incoming
-    batch shuffles, which is the 100 TB per-batch cost model
-    (tests/test_streaming_neardup.py pins the plan).
-
-    Exactly-once has the same shape as SnapshotTable's tag-skip:
-    ``append`` is idempotent per tag — a replayed batch whose tag is
-    already in the manifest is skipped; a crashed append leaves orphan
-    files in an UNCOMMITTED batch_id partition, which ``read()`` filters
-    out (partition pruning) and the replay deletes before re-writing.
-    Duck-typed to SnapshotTable's read()/append()/tags() so
-    ``land_batch`` takes either."""
-
-    def __init__(self, spark: SparkSession, root: str, buckets: int = 32):
-        import hashlib
-        import os
-
-        self.spark = spark
-        self.root = root
-        self.buckets = buckets
-        os.makedirs(root, exist_ok=True)
-        self.table_name = (
-            "neardup_bands_" + hashlib.md5(root.encode()).hexdigest()[:10]
-        )
-
-    # -- sidecar manifest (atomic rename, SnapshotTable convention) ------
-    @property
-    def _manifest_path(self) -> str:
-        import os
-
-        return os.path.join(self.root, "band_manifest.json")
-
-    def _manifest(self) -> dict:
-        import json
-
-        try:
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"batches": [], "tags": []}
-
-    def _commit(self, batch_id: int, tag: str | None) -> None:
-        import json
-        import os
-        import uuid
-
-        m = self._manifest()
-        m["batches"].append(int(batch_id))
-        if tag:
-            m["tags"].append(tag)
-        tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path)
-
-    def tags(self) -> list[str]:
-        return list(self._manifest()["tags"])
-
-    def _ensure_registered(self) -> None:
-        """Re-register the catalog entry after a session restart: the
-        in-memory catalog dies with the session, the files do not."""
-        import os
-
-        if self.spark.catalog.tableExists(self.table_name):
-            return
-        if os.path.isdir(os.path.join(self.root, "band_data")):
-            # recreate the table over the existing bucketed files by
-            # appending an empty frame with the same spec
-            empty = self.spark.createDataFrame(
-                [], "batch_id long, doc_id long, band int, minhash long"
-            )
-            self._write(empty)
-
-    def _write(self, df: DataFrame) -> None:
-        import os
-
-        (
-            df.write.format("parquet")
-            .mode("append")
-            .partitionBy("batch_id")
-            .bucketBy(self.buckets, "band", "minhash")
-            .sortBy("band", "minhash")
-            .option("path", os.path.join(self.root, "band_data"))
-            .saveAsTable(self.table_name)
-        )
-
-    def append(self, bands: DataFrame, tag: str | None = None) -> None:
-        import shutil
-        import os
-
-        m = self._manifest()
-        if tag and tag in m["tags"]:
-            return  # replay: already committed
-        self._ensure_registered()
-        batch_ids = [
-            r[0] for r in bands.select("batch_id").dropDuplicates().collect()
-        ]
-        for bid in batch_ids:
-            part_dir = os.path.join(self.root, "band_data", f"batch_id={bid}")
-            if os.path.isdir(part_dir) and bid not in m["batches"]:
-                # crashed earlier attempt: drop its orphan files so the
-                # re-append cannot double rows
-                shutil.rmtree(part_dir, ignore_errors=True)
-        self._write(bands.select("batch_id", "doc_id", "band", "minhash"))
-        for bid in batch_ids:
-            self._commit(bid, tag if bid == batch_ids[-1] else None)
-
-    def read(self) -> DataFrame | None:
-        self._ensure_registered()
-        committed = self._manifest()["batches"]
-        if not committed or not self.spark.catalog.tableExists(self.table_name):
-            return None
-        return self.spark.table(self.table_name).where(
-            F.col("batch_id").isin(committed)
-        )
+        release()
 
 
 def ingest_document_stream(
@@ -259,20 +131,13 @@ def ingest_document_stream(
     doc_dir: str,
     workdir: str,
     max_files_per_trigger: int = 1,
-    bucketed_state: bool = False,
 ):
     """Start the ingest: JSONL files of (doc_id, text) under ``doc_dir``
     -> results table at ``workdir``/neardup_results + band state at
     ``workdir``/neardup_bands. Returns the StreamingQuery (caller owns
-    awaitTermination/stop). ``bucketed_state=True`` stores the band
-    history as a (band, minhash)-bucketed catalog table so the per-batch
-    join reads the stored side exchange-free (BucketedBandState)."""
+    awaitTermination/stop)."""
     results = SnapshotTable(spark, f"{workdir}/neardup_results")
-    band_table = (
-        BucketedBandState(spark, f"{workdir}/neardup_bands")
-        if bucketed_state
-        else SnapshotTable(spark, f"{workdir}/neardup_bands")
-    )
+    band_table = SnapshotTable(spark, f"{workdir}/neardup_bands")
 
     raw = (
         spark.readStream.format("json")
