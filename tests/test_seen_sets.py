@@ -1,6 +1,7 @@
 """URL-seen set variants: exact vs Bloom vs Cuckoo agree at fixture
 scale; Cuckoo supports deletion (re-crawl)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -51,9 +52,13 @@ def test_cuckoo_deletion_allows_refetch(spark, tmp_path):
     assert again == {r.url for r in forget.collect()}
 
 
-def test_crawl_dedup_with_approx_seen_modes(spark, tmp_path):
+def test_crawl_dedup_with_approx_seen_modes(spark, tmp_path, monkeypatch):
     """The crawl's dedup path over Bloom/Cuckoo seen sets (sized for zero
-    FP at fixture scale) produces the same final state as exact mode."""
+    FP at fixture scale) produces the same final state as exact mode —
+    with ONE seen-set pass for the seeds and one per discovering round
+    (depth 0 at the default max_depth=1): the last depth's rounds make
+    none, and a round stages its insert in the pass that tests novelty."""
+    from web_scraper_spark.operators import seen as seen_mod
     from web_scraper_spark.plans.crawl import run_crawl
     from web_scraper_spark.sources.synthetic_web import build_web, web_host_df
 
@@ -66,13 +71,26 @@ def test_crawl_dedup_with_approx_seen_modes(spark, tmp_path):
                        for r in exact.crawl_log.collect())
     exact_seen = {r.url for r in exact.url_seen.collect()}
 
+    passes = []
+    next_scratch = seen_mod._next_scratch
+
+    def counting(root, *a, **kw):
+        passes.append(root)
+        return next_scratch(root, *a, **kw)
+
+    monkeypatch.setattr(seen_mod, "_next_scratch", counting)
     for mode in ("bloom", "cuckoo"):
+        passes.clear()
         res = run_crawl(spark, seeds, webdf, None,
                         workdir=str(tmp_path / mode), dedup_contacts=True,
                         seen_mode=mode)
         got_log = sorted((r["round"], r.depth, r.seed_idx, r.url)
                          for r in res.crawl_log.collect())
         assert got_log == exact_log, mode
+        rounds = {rnd for rnd, _, _, _ in got_log}
+        depth0_rounds = {rnd for rnd, depth, _, _ in got_log if depth == 0}
+        assert len(rounds) > len(depth0_rounds) > 0, mode
+        assert len(passes) == 1 + len(depth0_rounds), mode
         assert {r.url for r in res.url_seen.collect()} == exact_seen, mode
 
 
@@ -174,13 +192,19 @@ def test_cuckoo_incremental_commits_and_delete_dirty(spark, tmp_path):
     # deletion dirties only the touched partitions and makes urls novel again
     ck.delete(few)
     assert len(ck.table._current_dirs()) == 3
-    assert ck.filter_and_add(few, insert=False).count() == 2
+    # an uncommitted pass tests novelty and leaves the state untouched
+    novel, commit = ck.stage(few)
+    assert novel.count() == 2
+    assert len(ck.table._current_dirs()) == 3
 
     # compact collapses generations, semantics preserved
     ck.compact()
     assert len(ck.table._current_dirs()) == 1
     assert ck.filter_and_add(_urls(spark, 0, 1500)).count() == 0
     assert ck.filter_and_add(few).count() == 2
+    # two later passes collected the staged pass: its commit raises
+    with pytest.raises(RuntimeError, match="expired"):
+        commit()
 
 
 def test_exact_seen_compact_dedups(spark, tmp_path):

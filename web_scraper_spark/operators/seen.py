@@ -20,14 +20,18 @@ Two interchangeable implementations behind ``URLSeenSet``:
   blobs. False positives drop URLs (never re-fetch), which is the
   standard crawler trade; size the bitset for the target FP rate.
 
-Both modes expose: ``filter_new(candidates) -> new_urls`` and
-``add(urls)``; parity tests run both and assert identical output on
-fixture scale (where Bloom is sized to zero collisions).
+Exact mode exposes ``filter_new(candidates) -> rows`` and ``add(urls)``.
+The blob-state modes (Bloom, and the cuckoo variant below) expose one
+pass, ``stage(candidates) -> (novel_urls, commit)``, and its
+committed-at-once form ``filter_and_add(candidates) -> novel_urls``.
+Tests run every mode and assert identical output at fixture scale
+(where Bloom is sized to zero collisions).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -243,6 +247,78 @@ class _BlobStateSeenSet:
             extra={self._PIDS_KEY: pid_map},
         )
 
+    def _merge_fn(self):
+        """The per-partition cogroup kernel ``merge(key, cand, state)``:
+        emits the partition's novel urls (``kind='url'``) and, when its
+        blob changed, the new blob (``kind='bits'``)."""
+        raise NotImplementedError
+
+    def stage(
+        self, candidates: DataFrame
+    ) -> tuple[DataFrame, Callable[[], None]]:
+        """One pass with the insert ON, committed LATER: returns the NOVEL
+        URLS (column ``url`` only) against the current state, and a
+        ``commit()`` that publishes the pass's dirty blobs. Until
+        ``commit()`` runs the table still reads the old state, so callers
+        that must checkpoint between discovering and committing novelty
+        (the crawl loop) stage, checkpoint, then commit — one cogroup, not
+        a test pass plus an insert pass. Callers needing the full
+        candidate rows join against the result — the common paths
+        (counting, enqueueing plain URLs) skip that second shuffle.
+
+        State commits are INCREMENTAL (VERDICT r4 item 5): merge emits a
+        blob only for DIRTY partitions, the scratch write splits urls/bits
+        via partitionBy, and ``commit()`` renames the bits subdir into the
+        table and commits it manifest-only — per batch the state I/O is
+        O(touched partitions) written ONCE, never a whole-table rewrite.
+        At the 10^10 design point (1024 x 1 GiB bitsets) a batch touching
+        5% of partitions commits ~50 GiB instead of 2 TiB. All dirty blobs
+        land in ONE dir + ONE manifest rename, so the commit stays atomic
+        — there is no partial-blob crash window. The scratch dir lives two
+        seen-set passes (``_next_scratch``), so commit before the next
+        pass."""
+        return self._pass(candidates, self._merge_fn())
+
+    def filter_and_add(self, candidates: DataFrame, *compat: bool) -> DataFrame:
+        """``stage`` plus an immediate ``commit()``: returns the novel urls
+        and persists them. ``compat`` only absorbs the positional ``True``
+        that perfbench/selftest.py's wrapper forwards (the former insert
+        flag); any other value raises — a deferred insert is ``stage``."""
+        if compat not in ((), (True,)):
+            raise TypeError("filter_and_add always inserts; use stage()")
+        novel, commit = self.stage(candidates)
+        commit()
+        return novel
+
+    def _pass(
+        self, candidates: DataFrame, merge
+    ) -> tuple[DataFrame, Callable[[], None]]:
+        cand = candidates.withColumn("hash", F.xxhash64(F.col("url"))).withColumn(
+            "partition_id", F.pmod(F.col("hash"), F.lit(self.P)).cast("int")
+        )
+        result = (
+            cand.groupBy("partition_id")
+            .cogroup(self._state().groupBy("partition_id"))
+            .applyInPandas(merge, _BLOOM_OUT_SCHEMA)
+        )
+        # single materialization, split by kind at write time: urls and
+        # dirty blobs land in sibling subdirs of one scratch write —
+        # caching 10^7 url rows in executor memory and recomputing the
+        # cogroup are both avoided, and the bits subdir is committed by
+        # RENAME instead of a second Spark write.
+        scratch = _next_scratch(self.table.root)
+        result.write.mode("overwrite").partitionBy("kind").parquet(scratch)
+
+        def commit() -> None:
+            # a missing bits subdir means "nothing dirty"; a missing
+            # scratch dir means a later pass collected it — raise rather
+            # than silently drop the staged insert
+            if not os.path.isdir(scratch):
+                raise RuntimeError(f"staged seen-set pass {scratch} expired")
+            self._commit_dirty_bits(os.path.join(scratch, "kind=bits"))
+
+        return self._read_novel_urls(os.path.join(scratch, "kind=url")), commit
+
 
 class BloomURLSeenSet(_BlobStateSeenSet):
     """Bloom-mode seen set: per-partition bitsets in a SnapshotTable.
@@ -267,33 +343,11 @@ class BloomURLSeenSet(_BlobStateSeenSet):
         self.m = bits_per_partition
         self.k = num_hashes
 
-    def filter_and_add(self, candidates: DataFrame, insert: bool = True) -> DataFrame:
-        """One pass: returns the NOVEL URLS (column ``url`` only) and —
-        when ``insert`` — persists updated bitsets. ``insert=False`` is
-        the crash-safe test-only pass: callers that must checkpoint
-        between discovering and committing novelty (the crawl loop) test
-        first, checkpoint, then call again with ``insert=True``.
-        Callers needing the full candidate rows join against the result —
-        the common paths (counting, enqueueing plain URLs) skip that
-        second shuffle entirely.
-
-        State commits are INCREMENTAL (VERDICT r4 item 5): merge emits a
-        bitset blob only for DIRTY partitions (>=1 new bit set), the
-        scratch write splits urls/bits via partitionBy, and the bits
-        subdir is renamed into the table + committed manifest-only — per
-        batch the state I/O is O(touched partitions) written ONCE, never
-        a second whole-table rewrite. At the 10^10 design point (1024 x
-        1 GiB bitsets) a batch touching 5% of partitions commits ~50 GiB
-        instead of 2 TiB. All dirty blobs land in ONE dir + ONE manifest
-        rename, so the commit stays atomic — there is no partial-bitset
-        crash window."""
+    def _merge_fn(self):
+        """Bloom kernel: a url is novel unless all k of its bits are set;
+        novel urls set their bits (``bits |= positions(novel)``), and a
+        partition is dirty when it had >=1 novel url."""
         m, k = self.m, self.k
-        do_insert = insert
-
-        cand = candidates.withColumn("hash", F.xxhash64(F.col("url"))).withColumn(
-            "partition_id", F.pmod(F.col("hash"), F.lit(self.P)).cast("int")
-        )
-        state = self._state()
 
         def merge(key, cand_iter: pd.DataFrame, state_df: pd.DataFrame) -> pd.DataFrame:
             pid = int(key[0])
@@ -312,7 +366,7 @@ class BloomURLSeenSet(_BlobStateSeenSet):
                 masks = (1 << (pos & 7)).astype(np.uint8)
                 present = ((bits[bytes_idx] & masks) == masks).all(axis=1)
                 fresh = ~present
-                if do_insert and fresh.any():
+                if fresh.any():
                     np.bitwise_or.at(
                         bits, bytes_idx[fresh].ravel(), masks[fresh].ravel()
                     )
@@ -345,21 +399,7 @@ class BloomURLSeenSet(_BlobStateSeenSet):
                 )
             return pd.concat(frames, ignore_index=True)
 
-        result = (
-            cand.groupBy("partition_id")
-            .cogroup(state.groupBy("partition_id"))
-            .applyInPandas(merge, _BLOOM_OUT_SCHEMA)
-        )
-        # single materialization, split by kind at write time: urls and
-        # dirty bitsets land in sibling subdirs of one scratch write —
-        # caching 10^7 url rows in executor memory and recomputing the
-        # cogroup are both avoided, and the bits subdir can be committed
-        # by RENAME instead of a second Spark write.
-        scratch = _next_scratch(self.table.root)
-        result.write.mode("overwrite").partitionBy("kind").parquet(scratch)
-        if do_insert:
-            self._commit_dirty_bits(os.path.join(scratch, "kind=bits"))
-        return self._read_novel_urls(os.path.join(scratch, "kind=url"))
+        return merge
 
 
 
@@ -380,7 +420,7 @@ def _cuckoo_indices(h: np.ndarray, fp: np.ndarray, m: int):
 class CuckooURLSeenSet(_BlobStateSeenSet):
     """Cuckoo-filter mode: per-partition partial-key cuckoo tables
     (buckets x 4 slots of 16-bit fingerprints) behind the same
-    ``filter_and_add`` interface as Bloom. Trade-offs vs Bloom:
+    ``stage``/``filter_and_add`` interface as Bloom. Trade-offs vs Bloom:
     supports DELETION (re-crawl scheduling can forget URLs) and ~same
     space at <3% load penalty; inserts can fail at very high load
     (items then pass through as novel — fail-open, never drops novel
@@ -409,26 +449,18 @@ class CuckooURLSeenSet(_BlobStateSeenSet):
         self.P = num_partitions
         self.m = buckets_per_partition
 
-    def filter_and_add(
-        self, candidates: DataFrame, delete: bool = False, insert: bool = True
-    ) -> DataFrame:
-        """delete=False: returns novel urls + (when ``insert``) stores
-        them — ``insert=False`` is the crash-safe test-only pass (see
-        BloomURLSeenSet.filter_and_add). delete=True: removes the given
-        urls from the filter instead. State commits are incremental, like
-        Bloom's: only partitions whose slot table actually CHANGED (an
-        insert landed or a deletion zeroed a slot) emit a blob."""
-        m, P, max_kicks = self.m, self.P, self.MAX_KICKS
-        do_insert = insert
+    def _merge_fn(self, delete: bool = False):
+        """Cuckoo kernel. delete=False: novel urls are the ones whose
+        fingerprint is in neither candidate bucket, and each is inserted
+        (in the batch's order). delete=True: removes the given urls'
+        fingerprints instead and emits no urls. Only partitions whose
+        slot table actually CHANGED (an insert landed or a deletion
+        zeroed a slot) emit a blob."""
+        m, max_kicks = self.m, self.MAX_KICKS
         # plain module functions only — a bound method would drag `self`
         # (and its SparkSession) into the executor closure
         fingerprint = _cuckoo_fp
         indices = _cuckoo_indices
-
-        cand = candidates.withColumn("hash", F.xxhash64(F.col("url"))).withColumn(
-            "partition_id", F.pmod(F.col("hash"), F.lit(P)).cast("int")
-        )
-        state = self._state()
 
         def merge(key, cand_iter: pd.DataFrame, state_df: pd.DataFrame) -> pd.DataFrame:
             pid = int(key[0])
@@ -462,7 +494,7 @@ class CuckooURLSeenSet(_BlobStateSeenSet):
                     import random as _random
 
                     rng = _random.Random(pid)
-                    for row in fresh if do_insert else ():
+                    for row in fresh:
                         f = fp[row]
                         placed = False
                         for b in (i1[row], i2[row]):
@@ -512,16 +544,8 @@ class CuckooURLSeenSet(_BlobStateSeenSet):
                 )
             return pd.concat(frames, ignore_index=True)
 
-        result = (
-            cand.groupBy("partition_id")
-            .cogroup(state.groupBy("partition_id"))
-            .applyInPandas(merge, _BLOOM_OUT_SCHEMA)
-        )
-        scratch = _next_scratch(self.table.root)
-        result.write.mode("overwrite").partitionBy("kind").parquet(scratch)
-        if do_insert or delete:
-            self._commit_dirty_bits(os.path.join(scratch, "kind=bits"))
-        return self._read_novel_urls(os.path.join(scratch, "kind=url"))
+        return merge
 
     def delete(self, urls: DataFrame) -> None:
-        self.filter_and_add(urls, delete=True)
+        _, commit = self._pass(urls, self._merge_fn(delete=True))
+        commit()

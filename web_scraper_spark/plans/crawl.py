@@ -478,7 +478,7 @@ def run_crawl(
                 # checkpointed frontier first; duplicates collapse under
                 # the final dropDuplicates (ADVICE r1)
                 discovered_t.append(state.select("url"))
-                seen.filter_and_add(state.select("url")).count()
+                seen.filter_and_add(state.select("url"))
             else:
                 seen.add(state.select("url"))
     else:
@@ -555,7 +555,7 @@ def run_crawl(
                 # the filter block re-discovery while the log lost the
                 # urls forever (ADVICE r1)
                 discovered_t.append(seeds_df.select("url"))
-                seen.filter_and_add(seeds_df.select("url")).count()
+                seen.filter_and_add(seeds_df.select("url"))
             else:
                 seen.add(seeds_df.select("url"))
         else:
@@ -698,74 +698,86 @@ def run_crawl(
             images_t.append(landed)
 
         # ---- next frontier --------------------------------------------
-        contacts = (
-            extracted.where(F.col("depth") < max_depth)
-            .select(
-                "seed_idx",
-                "seed_url",
-                F.explode("contact_links").alias("url"),
+        # Every row of a round has depth == depth_now (_stage_depth stages
+        # one depth at a time; seeds are depth 0), so whether a round can
+        # discover is known on the driver: contacts need depth < max_depth
+        # and images depth 0. The politeness tail of the last depth
+        # discovers nothing and skips the whole block — explode, dedup
+        # shuffle, seen-set pass, empty delta write, discovered-log commit.
+        discovers = depth_now < max_depth or depth_now == 0
+        if discovers:
+            contacts = (
+                extracted.where(F.col("depth") < max_depth)
+                .select(
+                    "seed_idx",
+                    "seed_url",
+                    F.explode("contact_links").alias("url"),
+                )
+                .withColumn("caption", F.lit(None).cast("string"))
             )
-            .withColumn("caption", F.lit(None).cast("string"))
-        )
-        image_links = (
-            # images are discovered on depth-0 pages only (contact pages
-            # carry none in the fixture; the oracle pins the same rule)
-            extracted.where(F.col("depth") == 0)
-            .select(
-                "seed_idx",
-                "seed_url",
-                F.explode("images").alias("img"),
+            image_links = (
+                # images are discovered on depth-0 pages only (contact
+                # pages carry none in the fixture; the oracle pins the
+                # same rule)
+                extracted.where(F.col("depth") == 0)
+                .select(
+                    "seed_idx",
+                    "seed_url",
+                    F.explode("images").alias("img"),
+                )
+                .select(
+                    "seed_idx", "seed_url",
+                    F.col("img.src").alias("url"),
+                    F.col("img.caption").alias("caption"),
+                )
             )
-            .select(
-                "seed_idx", "seed_url",
-                F.col("img.src").alias("url"),
-                F.col("img.caption").alias("caption"),
+            discovered = contacts.unionByName(image_links).withColumn(
+                "host", host_of(F.col("url"))
             )
-        )
-        discovered = contacts.unionByName(image_links).withColumn(
-            "host", host_of(F.col("url"))
-        )
-        if dedup_contacts:
-            # cache: the membership test against the whole seen set is
-            # the priciest per-round op — evaluate it once, not per action
-            deduped = discovered.dropDuplicates(["url"])
-            if approx_seen:
-                # crash-safe two-phase: test-only now, insert after the
-                # frontier commit below
-                novel = seen.filter_and_add(deduped.select("url"), insert=False)
-                discovered = deduped.join(novel, "url", "left_semi").cache()
+            if dedup_contacts:
+                # cache: the membership test against the whole seen set
+                # is the priciest per-round op — evaluate it once, not
+                # per action
+                deduped = discovered.dropDuplicates(["url"])
+                if approx_seen:
+                    # crash-safe two-phase in ONE pass: the staged insert
+                    # is committed only after the frontier commit below
+                    novel, commit_seen = seen.stage(deduped.select("url"))
+                    discovered = deduped.join(novel, "url", "left_semi").cache()
+                else:
+                    discovered = seen.filter_new(deduped).cache()
             else:
-                discovered = seen.filter_new(deduped).cache()
-        else:
-            # parity mode never READS the seen set mid-crawl (F5: no
-            # contact dedup), so discoveries go to an append-only log —
-            # no per-round dedup shuffle; one distinct at the end.
-            # Appended UNCONDITIONALLY: a pre-write isEmpty() probe costs
-            # the same driver job as writing an empty delta, and nonempty
-            # rounds (the common case) save the probe entirely
-            discovered_t.append(discovered.select("url"))
-        next_depth = _with_priority(
-            discovered.select(
-                "url", "host",
-                (F.lit(depth_now) + 1).cast("int").alias("depth"),
-                "seed_idx", "seed_url", "caption",
-            ),
-            priority_expr,
-        )
-        # one delta dir per producing round — staged rows are written
-        # exactly once, never rewritten. Written unconditionally, then
-        # emptiness is read off the parquet footers driver-side (~ms):
-        # the old isEmpty() pre-probe was a full extra Spark job per
-        # round re-walking the discovery subtree (guide §1.2 — fewer
-        # passes). An empty delta dir is uncommitted, so removing it
-        # leaves no orphan.
-        path = frontier_t.write_data(next_depth)
-        if _parquet_num_rows(path) > 0:
-            staged_dirs.append(path)
-        else:
-            import shutil
+                # parity mode never READS the seen set mid-crawl (F5: no
+                # contact dedup), so discoveries go to an append-only log
+                # — no per-round dedup shuffle; one distinct at the end.
+                # Appended UNCONDITIONALLY: a pre-write isEmpty() probe
+                # costs the same driver job as writing an empty delta,
+                # and nonempty rounds (the common case) save the probe
+                discovered_t.append(discovered.select("url"))
+            next_depth = _with_priority(
+                discovered.select(
+                    "url", "host",
+                    (F.lit(depth_now) + 1).cast("int").alias("depth"),
+                    "seed_idx", "seed_url", "caption",
+                ),
+                priority_expr,
+            )
+            # one delta dir per producing round — staged rows are written
+            # exactly once, never rewritten. Written unconditionally, then
+            # the row count is read off the parquet footers driver-side
+            # (~ms): an isEmpty() probe is a full extra Spark job
+            # re-walking the discovery subtree (guide §1.2 — fewer
+            # passes). next_depth only adds a column to `discovered`, so
+            # the count is also discovered's row count below. An empty
+            # delta dir is uncommitted, so removing it leaves no orphan.
+            path = frontier_t.write_data(next_depth)
+            n_next = _parquet_num_rows(path)
+            if n_next > 0:
+                staged_dirs.append(path)
+            else:
+                import shutil
 
-            shutil.rmtree(path, ignore_errors=True)
+                shutil.rmtree(path, ignore_errors=True)
 
         # ---- checkpoint: manifest-only commit (remaining round dirs +
         # staged deltas + resume metadata) under one tag ------------------
@@ -779,22 +791,22 @@ def run_crawl(
                 "depth": depth_now,
             },
         )
-        if dedup_contacts:
+        if discovers and dedup_contacts:
             # seen-set insert AFTER the frontier commit: a crash between
             # the two re-fetches at most one round's discoveries on
             # resume (at-least-once) instead of silently LOSING them
             # (filter_new would have dropped a replayed round's own
             # discoveries had they been committed first)
-            if not discovered.isEmpty():
+            if n_next > 0:
                 if approx_seen:
-                    # log append BEFORE the filter insert: once the filter
+                    # log append BEFORE the filter commit: once the filter
                     # holds a url it blocks re-discovery, so a crash in
                     # between must leave the url already in the log
                     # (append is idempotent under the final
                     # dropDuplicates; ADVICE r1 — the old order silently
                     # dropped a crashed round's discoveries from url_seen)
                     discovered_t.append(discovered.select("url"))
-                    seen.filter_and_add(discovered.select("url")).count()
+                    commit_seen()
                 else:
                     seen.add(discovered.select("url"))
             discovered.unpersist()
