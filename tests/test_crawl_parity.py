@@ -165,15 +165,21 @@ def test_graft_dedup_mode_no_duplicate_fetches(spark, fixture_web, tmp_path):
     assert dupes.isEmpty()
 
 
-def test_resume_dedup_mode_no_lost_discoveries(spark, fixture_web, tmp_path):
-    """Review regression: with dedup_contacts=True, a crash between the
-    frontier commit and the seen-set insert must NOT lose that round's
-    discoveries on resume (the seen set is restored from the checkpoint)."""
+@pytest.mark.parametrize("seen_mode", ["exact", "bloom", "cuckoo"])
+def test_resume_dedup_mode_no_lost_discoveries(spark, fixture_web, tmp_path, seen_mode):
+    """Review regression + ADVICE r1 (medium): with dedup_contacts=True, a
+    crash between the frontier commit and the post-commit bookkeeping
+    (discovered-log append, seen-set commit) must NOT lose that round's
+    discoveries on resume — neither from the crawl (the seen set is
+    restored from the checkpoint) nor from the reported url_seen set (the
+    discovered log is written BEFORE the seen commit and re-appended on
+    resume)."""
     seeds, web, names, webdf = fixture_web
     from web_scraper_spark.plans.crawl import run_crawl
 
     full = run_crawl(spark, seeds, webdf, names,
-                     workdir=str(tmp_path / "full_d"), dedup_contacts=True)
+                     workdir=str(tmp_path / "full_d"),
+                     dedup_contacts=True, seen_mode=seen_mode)
 
     workdir = str(tmp_path / "intr_d")
     import web_scraper_spark.sources.tables as tables_mod
@@ -184,54 +190,7 @@ def test_resume_dedup_mode_no_lost_discoveries(spark, fixture_web, tmp_path):
     def bomb(self, dirs, tag=None, extra=None):
         original(self, dirs, tag, extra)
         # die right after the first round's frontier commit — before the
-        # post-commit seen.add runs
-        if tag == "round-0":
-            calls["n"] += 1
-            if calls["n"] == 1:
-                raise KeyboardInterrupt("simulated driver death")
-
-    tables_mod.SnapshotTable.commit_dirs = bomb
-    try:
-        with pytest.raises(KeyboardInterrupt):
-            run_crawl(spark, seeds, webdf, names, workdir=workdir,
-                      dedup_contacts=True)
-    finally:
-        tables_mod.SnapshotTable.commit_dirs = original
-
-    resumed = run_crawl(spark, seeds, webdf, names, workdir=workdir,
-                        resume=True, dedup_contacts=True)
-    got = sorted((r["round"], r.depth, r.seed_idx, r.url)
-                 for r in resumed.crawl_log.collect())
-    exp = sorted((r["round"], r.depth, r.seed_idx, r.url)
-                 for r in full.crawl_log.collect())
-    assert got == exp
-    assert {r.url for r in resumed.url_seen.collect()} == {
-        r.url for r in full.url_seen.collect()
-    }
-
-
-@pytest.mark.parametrize("seen_mode", ["bloom", "cuckoo"])
-def test_resume_approx_seen_no_lost_discoveries(spark, fixture_web, tmp_path, seen_mode):
-    """ADVICE r1 (medium): in approx seen modes a crash between the
-    frontier commit and the post-commit bookkeeping must not drop that
-    round's discoveries from the reported url_seen set — the filter can't
-    be enumerated, so the discovered log must be written BEFORE the
-    filter insert and re-appended on resume."""
-    seeds, web, names, webdf = fixture_web
-    from web_scraper_spark.plans.crawl import run_crawl
-
-    full = run_crawl(spark, seeds, webdf, names,
-                     workdir=str(tmp_path / "full_a"),
-                     dedup_contacts=True, seen_mode=seen_mode)
-
-    workdir = str(tmp_path / "intr_a")
-    import web_scraper_spark.sources.tables as tables_mod
-
-    original = tables_mod.SnapshotTable.commit_dirs
-    calls = {"n": 0}
-
-    def bomb(self, dirs, tag=None, extra=None):
-        original(self, dirs, tag, extra)
+        # post-commit bookkeeping runs
         if tag == "round-0":
             calls["n"] += 1
             if calls["n"] == 1:

@@ -19,23 +19,16 @@ def test_exact_bloom_cuckoo_agree(spark, tmp_path):
 
     batch1 = _urls(spark, 0, 3000)
     batch2 = _urls(spark, 1500, 4500)  # half dupes
+    all1 = {r.url for r in batch1.collect()}
+    novel2 = {r.url for r in batch2.collect()} - all1
 
-    exact = URLSeenSet(spark, str(tmp_path / "exact"))
-    exact.add(batch1)
-    exact_novel2 = {r.url for r in exact.filter_new(batch2).collect()}
-    exact.add(batch2)
-
-    bloom = BloomURLSeenSet(spark, str(tmp_path / "bloom"), num_partitions=8)
-    b1 = {r.url for r in bloom.filter_and_add(batch1).collect()}
-    b2 = {r.url for r in bloom.filter_and_add(batch2).collect()}
-
-    cuckoo = CuckooURLSeenSet(spark, str(tmp_path / "cuckoo"), num_partitions=8)
-    c1 = {r.url for r in cuckoo.filter_and_add(batch1).collect()}
-    c2 = {r.url for r in cuckoo.filter_and_add(batch2).collect()}
-
-    all1 = {r.url for r in batch1.distinct().collect()}
-    assert b1 == all1 and c1 == all1  # sized for zero FP at this scale
-    assert b2 == exact_novel2 and c2 == exact_novel2
+    for cls, kw in ((URLSeenSet, {}),
+                    (BloomURLSeenSet, {"num_partitions": 8}),
+                    (CuckooURLSeenSet, {"num_partitions": 8})):
+        s = cls(spark, str(tmp_path / cls.__name__), **kw)
+        # the approximate sets are sized for zero FP at this scale
+        assert {r.url for r in s.filter_and_add(batch1).collect()} == all1, cls
+        assert {r.url for r in s.filter_and_add(batch2).collect()} == novel2, cls
 
 
 def test_cuckoo_deletion_allows_refetch(spark, tmp_path):
@@ -52,12 +45,13 @@ def test_cuckoo_deletion_allows_refetch(spark, tmp_path):
     assert again == {r.url for r in forget.collect()}
 
 
-def test_crawl_dedup_with_approx_seen_modes(spark, tmp_path, monkeypatch):
+def test_crawl_dedup_seen_modes_agree(spark, tmp_path, monkeypatch):
     """The crawl's dedup path over Bloom/Cuckoo seen sets (sized for zero
     FP at fixture scale) produces the same final state as exact mode —
-    with ONE seen-set pass for the seeds and one per discovering round
-    (depth 0 at the default max_depth=1): the last depth's rounds make
-    none, and a round stages its insert in the pass that tests novelty."""
+    and every mode makes ONE seen-set pass for the seeds and one per
+    discovering round (depth 0 at the default max_depth=1): the last
+    depth's rounds make none, and a round stages its insert in the pass
+    that tests novelty."""
     from web_scraper_spark.operators import seen as seen_mod
     from web_scraper_spark.plans.crawl import run_crawl
     from web_scraper_spark.sources.synthetic_web import build_web, web_host_df
@@ -65,33 +59,31 @@ def test_crawl_dedup_with_approx_seen_modes(spark, tmp_path, monkeypatch):
     seeds, web = build_web(15)
     webdf = web_host_df(spark, 15)
 
-    exact = run_crawl(spark, seeds, webdf, None,
-                      workdir=str(tmp_path / "ex"), dedup_contacts=True)
-    exact_log = sorted((r["round"], r.depth, r.seed_idx, r.url)
-                       for r in exact.crawl_log.collect())
-    exact_seen = {r.url for r in exact.url_seen.collect()}
-
     passes = []
-    next_scratch = seen_mod._next_scratch
+    for cls in (seen_mod.URLSeenSet, seen_mod._BlobStateSeenSet):
+        def counting(self, candidates, _stage=vars(cls)["stage"]):
+            passes.append(type(self).__name__)
+            return _stage(self, candidates)
 
-    def counting(root, *a, **kw):
-        passes.append(root)
-        return next_scratch(root, *a, **kw)
+        monkeypatch.setattr(cls, "stage", counting)
 
-    monkeypatch.setattr(seen_mod, "_next_scratch", counting)
-    for mode in ("bloom", "cuckoo"):
+    exact_log = exact_seen = None
+    for mode in ("exact", "bloom", "cuckoo"):
         passes.clear()
         res = run_crawl(spark, seeds, webdf, None,
                         workdir=str(tmp_path / mode), dedup_contacts=True,
                         seen_mode=mode)
         got_log = sorted((r["round"], r.depth, r.seed_idx, r.url)
                          for r in res.crawl_log.collect())
+        got_seen = {r.url for r in res.url_seen.collect()}
+        if exact_log is None:
+            exact_log, exact_seen = got_log, got_seen
         assert got_log == exact_log, mode
+        assert got_seen == exact_seen, mode
         rounds = {rnd for rnd, _, _, _ in got_log}
         depth0_rounds = {rnd for rnd, depth, _, _ in got_log if depth == 0}
         assert len(rounds) > len(depth0_rounds) > 0, mode
         assert len(passes) == 1 + len(depth0_rounds), mode
-        assert {r.url for r in res.url_seen.collect()} == exact_seen, mode
 
 
 def test_bloom_incremental_commits_dirty_partitions_only(spark, tmp_path):
@@ -208,17 +200,19 @@ def test_cuckoo_incremental_commits_and_delete_dirty(spark, tmp_path):
 
 
 def test_exact_seen_compact_dedups(spark, tmp_path):
-    """ADVICE r1: resume re-adds are idempotent only if compaction
-    collapses the (hash, url) duplicates — URLSeenSet owns that."""
+    """ADVICE r1: two passes staged against the same state both hold
+    every url once committed; compaction collapses the (hash, url)
+    duplicates — URLSeenSet owns that."""
     from web_scraper_spark.operators.seen import URLSeenSet
 
     s = URLSeenSet(spark, str(tmp_path / "cse"))
     batch = _urls(spark, 0, 200)
-    s.add(batch)
-    s.add(batch)  # simulated resume re-add
+    staged = [s.stage(batch), s.stage(batch)]
+    assert [novel.count() for novel, _ in staged] == [200, 200]
+    for _, commit in staged:
+        commit()
     assert s.table.read().count() == 400
     s.compact()
     assert s.table.read().count() == 200
-    assert s.snapshot_urls().count() == 200
     # novelty unchanged by compaction
-    assert s.filter_new(batch).isEmpty()
+    assert s.filter_and_add(batch).count() == 0

@@ -67,31 +67,16 @@ def test_expire_after_crawl_shrinks_frontier_history(spark, tmp_path):
 
     seeds, web = build_web(12)
     oracle = simulate(seeds, web, None, politeness_budget=2)
-    # expiry off: per-round manifest history accumulates
+    # run_crawl expires on completion — history already trimmed, same
+    # results
     result = run_crawl(
-        spark, seeds, web_host_df(spark, 12), None,
-        workdir=str(tmp_path / "keep"), politeness_budget=2,
-        expire_history=False,
-    )
-    frontier = SnapshotTable(spark, str(tmp_path / "keep" / "frontier"))
-    assert len(frontier._read_manifest()["snapshots"]) > 3  # one per round
-    deleted = frontier.expire_snapshots(keep_last=1)
-    assert deleted >= 1  # consumed round dirs reclaimed
-    assert len(frontier._read_manifest()["snapshots"]) <= 2
-    # the crawl output is untouched by frontier-history expiry
-    got = sorted(tuple(r) for r in result.crawl_log.collect())
-    assert got == oracle.crawl_order
-
-    # default: run_crawl expires on completion — history already trimmed,
-    # same results
-    result2 = run_crawl(
         spark, seeds, web_host_df(spark, 12), None,
         workdir=str(tmp_path / "auto"), politeness_budget=2,
     )
-    frontier2 = SnapshotTable(spark, str(tmp_path / "auto" / "frontier"))
-    assert len(frontier2._read_manifest()["snapshots"]) <= 2
-    got2 = sorted(tuple(r) for r in result2.crawl_log.collect())
-    assert got2 == oracle.crawl_order
+    frontier = SnapshotTable(spark, str(tmp_path / "auto" / "frontier"))
+    assert len(frontier._read_manifest()["snapshots"]) <= 2
+    got = sorted(tuple(r) for r in result.crawl_log.collect())
+    assert got == oracle.crawl_order
 
 
 def test_expire_crash_between_trim_and_delete_never_drops_live_dirs(

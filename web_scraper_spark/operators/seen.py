@@ -1,11 +1,11 @@
-"""Partitioned URL-seen set (SURVEY.md F1 graft) — exact and Bloom modes.
+"""Partitioned URL-seen set (SURVEY.md F1 graft) — exact, Bloom and cuckoo modes.
 
 The reference's seen set is an in-memory Python set at the seed producer
 (run_url_producer.py:24,41-43). At a 10^10-URL frontier that set is ~1 TB
 of strings — so the graft design is: canonicalize -> ``xxhash64`` ->
 partition by hash -> per-partition membership.
 
-Two interchangeable implementations behind ``URLSeenSet``:
+Interchangeable implementations behind ``URLSeenSet``:
 
 - **exact** (default; correctness runs): the seen set is a SnapshotTable
   ``url_seen(hash, url)`` bucketed by hash; novelty = left-anti join on
@@ -20,10 +20,11 @@ Two interchangeable implementations behind ``URLSeenSet``:
   blobs. False positives drop URLs (never re-fetch), which is the
   standard crawler trade; size the bitset for the target FP rate.
 
-Exact mode exposes ``filter_new(candidates) -> rows`` and ``add(urls)``.
-The blob-state modes (Bloom, and the cuckoo variant below) expose one
-pass, ``stage(candidates) -> (novel_urls, commit)``, and its
-committed-at-once form ``filter_and_add(candidates) -> novel_urls``.
+Every mode (exact, Bloom, and the cuckoo variant below) speaks one
+protocol: a pass ``stage(candidates) -> (novel_urls, commit)`` that
+returns the novel urls against the committed state and publishes its
+insert only when ``commit()`` runs, and its committed-at-once form
+``filter_and_add(candidates) -> novel_urls``.
 Tests run every mode and assert identical output at fixture scale
 (where Bloom is sized to zero collisions).
 """
@@ -31,6 +32,8 @@ Tests run every mode and assert identical output at fixture scale
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Callable
 
 import numpy as np
@@ -41,57 +44,66 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, StringType, StructField, StructType,
 )
 
-from web_scraper_spark.sources.tables import SnapshotTable
+from web_scraper_spark.sources.tables import SnapshotTable, parquet_num_rows
 
-_SEEN_SCHEMA = "hash long, url string"
+_NUM_BUCKETS = 32
 
 
 class URLSeenSet:
-    """Exact-mode seen set over a SnapshotTable."""
+    """Exact-mode seen set over a SnapshotTable ``(hash, url)``, each
+    write laid out in ``_NUM_BUCKETS`` hash buckets."""
 
-    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.table = SnapshotTable(spark, root)
-        self.num_buckets = num_buckets
 
-    def _with_hash(self, urls: DataFrame) -> DataFrame:
-        return urls.withColumn("hash", F.xxhash64(F.col("url")))
-
-    def filter_new(self, candidates: DataFrame) -> DataFrame:
-        """Rows of ``candidates`` whose ``url`` is not in the seen set.
-        Duplicate urls WITHIN the batch are kept (reference F5 semantics:
-        cross-page duplicates in one round are all fetched); callers that
-        want batch-level dedup do it explicitly."""
-        seen = self.table.read()
-        if seen is None:
-            return candidates
-        cand = self._with_hash(candidates)
-        # anti-join on (hash, url): hash prunes via sort-merge/bloom pushdown,
-        # url equality makes it exact
-        out = cand.join(
-            seen.withColumnRenamed("url", "_seen_url"),
-            (cand["hash"] == seen["hash"]) & (cand["url"] == F.col("_seen_url")),
-            "left_anti",
+    def stage(
+        self, candidates: DataFrame
+    ) -> tuple[DataFrame, Callable[[], None]]:
+        """One pass, committed LATER: returns the distinct NOVEL urls of
+        ``candidates`` (column ``url`` only) and a ``commit()`` that adds
+        them to the set. The novel rows are written ONCE as an
+        uncommitted table dir (left-anti join on (hash, url): hash prunes
+        the sort-merge, url equality makes it exact); ``commit()`` lists
+        that dir in a manifest-only commit — no rename, so the returned
+        frame stays readable after it. Until then the table reads the old
+        state. A pass with zero novel urls leaves no dir and commits
+        nothing."""
+        cand = candidates.select("url").dropDuplicates(["url"]).withColumn(
+            "hash", F.xxhash64(F.col("url"))
         )
-        return out.drop("hash")
+        seen = self.table.read()
+        if seen is not None:
+            cand = cand.join(seen, ["hash", "url"], "left_anti")
+        path = self.table.write_data(
+            cand.repartition(_NUM_BUCKETS, F.col("hash")).select("hash", "url")
+        )
+        if parquet_num_rows(path) == 0:
+            shutil.rmtree(path, ignore_errors=True)
+            return self.spark.createDataFrame([], "url string"), lambda: None
 
-    def add(self, urls: DataFrame) -> None:
-        """Insert (idempotent — duplicates collapse on next compact)."""
-        batch = self._with_hash(urls.select("url").dropDuplicates(["url"]))
-        batch = batch.repartition(self.num_buckets, F.col("hash"))
-        self.table.append(batch.select("hash", "url"))
+        def commit() -> None:
+            self.table.commit_dirs(self.table._current_dirs() + [path])
+
+        return self.spark.read.parquet(path).select("url"), commit
+
+    def filter_and_add(self, candidates: DataFrame, *compat: bool) -> DataFrame:
+        """``stage`` plus an immediate ``commit()``: returns the novel urls
+        and persists them. ``compat`` only absorbs the positional ``True``
+        that perfbench/selftest.py's wrapper forwards (the former insert
+        flag); any other value raises — a deferred insert is ``stage``."""
+        if compat not in ((), (True,)):
+            raise TypeError("filter_and_add always inserts; use stage()")
+        novel, commit = self.stage(candidates)
+        commit()
+        return novel
 
     def compact(self) -> None:
-        """Compaction owns the logical-key dedup: cross-append duplicates
-        (idempotent resume re-adds) collapse here, keeping the documented
-        ``add`` invariant true and the table size O(distinct urls)."""
+        """Compaction owns the logical-key dedup: passes staged against
+        the same state before either commits can both hold a url, and
+        those duplicates collapse here, keeping the table size
+        O(distinct urls)."""
         self.table.compact(dedup_cols=["hash", "url"])
-
-    def snapshot_urls(self) -> DataFrame:
-        seen = self.table.read()
-        if seen is None:
-            return self.spark.createDataFrame([], "url string")
-        return seen.select("url").dropDuplicates(["url"])
 
 
 _BLOOM_STATE_SCHEMA = StructType(
@@ -115,10 +127,6 @@ def _next_scratch(root: str, keep: int = 2) -> str:
     garbage-collect all but the ``keep`` most recent ones (the previous
     call's returned DataFrame may still reference its dir lazily; two
     generations is the documented lifetime)."""
-    import os
-    import shutil
-    import uuid
-
     base = os.path.join(root, "scratch")
     os.makedirs(base, exist_ok=True)
     existing = sorted(
@@ -152,14 +160,13 @@ def _bloom_positions(hashes: np.ndarray, k: int, m: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
 
 
-class _BlobStateSeenSet:
+class _BlobStateSeenSet(URLSeenSet):
     """Shared machinery for seen sets whose state is P per-partition
     binary blobs in a SnapshotTable (Bloom bitsets, cuckoo slot tables):
     incremental dirty-partition commits, latest-wins reads, and the
-    compaction that collapses generations (VERDICT r4 item 5)."""
+    compaction that collapses generations (VERDICT r4 item 5).
+    ``filter_and_add`` is the exact set's, over this ``stage``."""
 
-    spark: SparkSession
-    table: SnapshotTable
     P: int
 
     _PIDS_KEY = "blob_dir_pids"
@@ -211,7 +218,6 @@ class _BlobStateSeenSet:
         if not self.table.exists():
             return
         self.table.overwrite(self._state())
-
 
     def _read_novel_urls(self, url_dir: str) -> DataFrame:
         if not os.path.isdir(url_dir):  # zero novel URLs in the batch
@@ -279,17 +285,6 @@ class _BlobStateSeenSet:
         pass."""
         return self._pass(candidates, self._merge_fn())
 
-    def filter_and_add(self, candidates: DataFrame, *compat: bool) -> DataFrame:
-        """``stage`` plus an immediate ``commit()``: returns the novel urls
-        and persists them. ``compat`` only absorbs the positional ``True``
-        that perfbench/selftest.py's wrapper forwards (the former insert
-        flag); any other value raises — a deferred insert is ``stage``."""
-        if compat not in ((), (True,)):
-            raise TypeError("filter_and_add always inserts; use stage()")
-        novel, commit = self.stage(candidates)
-        commit()
-        return novel
-
     def _pass(
         self, candidates: DataFrame, merge
     ) -> tuple[DataFrame, Callable[[], None]]:
@@ -337,8 +332,7 @@ class BloomURLSeenSet(_BlobStateSeenSet):
         bits_per_partition: int = 1 << 23,
         num_hashes: int = 7,
     ):
-        self.spark = spark
-        self.table = SnapshotTable(spark, root)
+        super().__init__(spark, root)
         self.P = num_partitions
         self.m = bits_per_partition
         self.k = num_hashes
@@ -444,8 +438,7 @@ class CuckooURLSeenSet(_BlobStateSeenSet):
             # involution (evicted items stay findable) when m is a power
             # of two
             raise ValueError("buckets_per_partition must be a power of two")
-        self.spark = spark
-        self.table = SnapshotTable(spark, root)
+        super().__init__(spark, root)
         self.P = num_partitions
         self.m = buckets_per_partition
 

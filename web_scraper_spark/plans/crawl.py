@@ -40,30 +40,25 @@ from web_scraper_spark.functions.urls import (
     domain_from_url,
     host_of,
     prepare_url,
+    strip_ws,
 )
 from web_scraper_spark.operators.extract import extract_all
 from web_scraper_spark.operators.images import land_images
 from web_scraper_spark.operators.politeness import assign_rounds
-from web_scraper_spark.operators.seen import URLSeenSet
+from web_scraper_spark.operators.seen import (
+    BloomURLSeenSet, CuckooURLSeenSet, URLSeenSet,
+)
 from web_scraper_spark.sources.fetch import fetch_join
-from web_scraper_spark.sources.tables import SnapshotTable, merge_company_records
+from web_scraper_spark.sources.tables import (
+    SnapshotTable, merge_company_records, parquet_num_rows,
+)
 
 FRONTIER_SCHEMA = (
     "url string, host string, depth int, seed_idx long, seed_url string, "
     "caption string, priority double, round_offset long"
 )
 
-def _parquet_num_rows(path: str) -> int:
-    """Total row count of a just-written parquet dir from file footers —
-    a driver-side metadata read (no Spark job)."""
-    import pathlib
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    for f in pathlib.Path(path).glob("*.parquet"):
-        total += pq.ParquetFile(str(f)).metadata.num_rows
-    return total
+_SEEN_SETS = {"exact": URLSeenSet, "bloom": BloomURLSeenSet, "cuckoo": CuckooURLSeenSet}
 
 
 @dataclass
@@ -89,28 +84,30 @@ def _seed_frontier(spark: SparkSession, seeds: list[str]) -> DataFrame:
     raw = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n_slices), "row_idx long, raw string"
     )
-    from web_scraper_spark.functions.urls import strip_ws
-
     prepared = (
         raw.where(strip_ws(F.coalesce(F.col("raw"), F.lit(""))) != "")
         .withColumn("url", prepare_url(F.col("raw")))
     )
     first = prepared.groupBy("url").agg(F.min("row_idx").alias("first_row"))
-    from pyspark.sql import Window
-
     w = Window.orderBy("first_row")
-    return (
+    return _depth0(
         first.withColumn(
             "seed_idx", (F.row_number().over(w) - F.lit(1)).cast("long")
-        )
-        .select(
-            "url",
-            host_of(F.col("url")).alias("host"),
-            F.lit(0).cast("int").alias("depth"),
-            "seed_idx",
-            F.col("url").alias("seed_url"),
-            F.lit(None).cast("string").alias("caption"),
-        )
+        ),
+        host_of(F.col("url")),
+    )
+
+
+def _depth0(df: DataFrame, host) -> DataFrame:
+    """The depth-0 frontier projection of a seed source: each seed is its
+    own ``seed_url``, with no caption."""
+    return df.select(
+        "url",
+        host.alias("host"),
+        F.lit(0).cast("int").alias("depth"),
+        "seed_idx",
+        F.col("url").alias("seed_url"),
+        F.lit(None).cast("string").alias("caption"),
     )
 
 
@@ -125,14 +122,12 @@ def _seed_frontier_from_table(spark: SparkSession, table_path: str) -> DataFrame
     ``seeds`` list therefore holds when the direct list enumerates each
     batch's URLs in lexicographic order (pinned by
     tests/test_streaming_frontier.py)."""
-    from pyspark.sql import Window
-
     t = SnapshotTable(spark, table_path)
     df = t.read()
     if df is None:
         raise ValueError(f"seed_table {table_path!r} has no committed snapshot")
     w = Window.orderBy(F.asc("_batch"), F.asc("url"))  # _batch = ingest batch_id
-    return (
+    return _depth0(
         # min(_batch) per url, not dropDuplicates: a URL re-ingested in a
         # later batch (second ingest run into the same table — the
         # streaming dedup state does not span queries) must resolve to a
@@ -140,15 +135,8 @@ def _seed_frontier_from_table(spark: SparkSession, table_path: str) -> DataFrame
         df.select("url", "host", F.col("seed_idx").alias("_batch"))
         .groupBy("url", "host")
         .agg(F.min("_batch").alias("_batch"))
-        .withColumn("seed_idx", (F.row_number().over(w) - F.lit(1)).cast("long"))
-        .select(
-            "url",
-            "host",
-            F.lit(0).cast("int").alias("depth"),
-            "seed_idx",
-            F.col("url").alias("seed_url"),
-            F.lit(None).cast("string").alias("caption"),
-        )
+        .withColumn("seed_idx", (F.row_number().over(w) - F.lit(1)).cast("long")),
+        F.col("host"),
     )
 
 
@@ -239,7 +227,6 @@ def run_crawl(
     live_timeout_s: float = 15.0,
     priority_expr=None,
     seen_mode: str = "exact",
-    expire_history: bool = True,
     seed_table: str | None = None,
     export_warc: bool = False,
 ) -> CrawlResult:
@@ -252,9 +239,10 @@ def run_crawl(
     ``robots_agent``: RFC 9309 §2.2.1 product token (default '*' =
     wildcard groups only). ``ingest_sitemaps=True``: robots-advertised
     sitemap pages join the depth-0 frontier (hermetic mode only — a live
-    crawl learns rules per depth, after staging). ``expire_history``:
-    trim every table to its current snapshot (+ the frontier's resume
-    tag) on completion. ``seed_table``: path to a streaming-ingested
+    crawl learns rules per depth, after staging). On completion every
+    table is trimmed to its current snapshot (+ the frontier's resume
+    tag). ``seen_mode``: the URL-seen set behind ``dedup_contacts``,
+    'exact', 'bloom' or 'cuckoo'. ``seed_table``: path to a streaming-ingested
     frontier SnapshotTable (streaming/frontier.ingest_seed_stream) to
     seed from instead of the ``seeds`` list — the batch half of the
     stream-to-crawl handoff. ``export_warc=True``: archive every fetch
@@ -267,20 +255,10 @@ def run_crawl(
     records_t = SnapshotTable(spark, os.path.join(workdir, "company_records"))
     images_t = SnapshotTable(spark, os.path.join(workdir, "images"))
     discovered_t = SnapshotTable(spark, os.path.join(workdir, "discovered_log"))
-    if seen_mode == "exact":
-        seen = URLSeenSet(spark, os.path.join(workdir, "url_seen"))
-    elif seen_mode == "bloom":
-        from web_scraper_spark.operators.seen import BloomURLSeenSet
-
-        seen = BloomURLSeenSet(spark, os.path.join(workdir, "url_seen"))
-    elif seen_mode == "cuckoo":
-        from web_scraper_spark.operators.seen import CuckooURLSeenSet
-
-        seen = CuckooURLSeenSet(spark, os.path.join(workdir, "url_seen"))
-    else:
+    if seen_mode not in _SEEN_SETS:
         raise ValueError(f"unknown seen_mode {seen_mode!r}")
-    approx_seen = seen_mode != "exact"
-    if approx_seen and not dedup_contacts:
+    seen = _SEEN_SETS[seen_mode](spark, os.path.join(workdir, "url_seen"))
+    if seen_mode != "exact" and not dedup_contacts:
         raise ValueError(
             "approximate seen modes only apply with dedup_contacts=True "
             "(parity mode never reads the seen set mid-crawl)"
@@ -316,8 +294,6 @@ def run_crawl(
         are excluded from the anti-join). The latest row per host wins in
         the rules view."""
         nonlocal robots_rules
-        import time as _time
-
         from web_scraper_spark.sources.fetch import fetch_live
         from web_scraper_spark.sources.robots import build_rules_table
 
@@ -379,7 +355,7 @@ def run_crawl(
             robots_t.append(
                 got.unionByName(unavailable)
                 .unionByName(unreachable)
-                .withColumn("fetched_at", F.lit(_time.time()))
+                .withColumn("fetched_at", F.lit(time.time()))
             )
             fetched.unpersist()
         cached = robots_t.read()
@@ -468,19 +444,14 @@ def run_crawl(
         if dedup_contacts:
             # restore the seen ⊇ enqueued invariant: a crash between the
             # frontier commit and the (post-commit) seen insert may have
-            # lost the last round's discoveries from the seen set;
-            # re-adding the checkpointed frontier is idempotent (approx
-            # modes test membership before inserting)
-            if approx_seen:
-                # the discovered LOG may also have missed that round's
-                # urls (a Bloom/Cuckoo filter can't be enumerated, so the
-                # log is the reported url_seen set) — re-append the
-                # checkpointed frontier first; duplicates collapse under
-                # the final dropDuplicates (ADVICE r1)
-                discovered_t.append(state.select("url"))
-                seen.filter_and_add(state.select("url"))
-            else:
-                seen.add(state.select("url"))
+            # lost the last round's discoveries from the seen set and from
+            # the discovered LOG (the reported url_seen set) — re-append
+            # the checkpointed frontier to the log first, then re-add it
+            # to the seen set; both are idempotent (log duplicates
+            # collapse under the final dropDuplicates, and every seen set
+            # tests membership before inserting; ADVICE r1)
+            discovered_t.append(state.select("url"))
+            seen.filter_and_add(state.select("url"))
     else:
         # fresh run: clear any stale state from a previous run in this dir
         # (incl. the live robots cache — rules may have changed upstream)
@@ -547,19 +518,13 @@ def run_crawl(
             seeds_df = seeds_df.unionByName(
                 _with_priority(extra, priority_expr)
             ).cache()
+        # discovered-log append BEFORE the seen-set insert: a crash
+        # between the two re-appends on resume (idempotent under the final
+        # dropDuplicates) — the reverse order would let the seen set block
+        # re-discovery while the log lost the urls forever (ADVICE r1)
+        discovered_t.append(seeds_df.select("url"))
         if dedup_contacts:
-            if approx_seen:
-                # discovered-log append BEFORE the filter insert: a crash
-                # between the two re-appends on resume (idempotent under
-                # the final dropDuplicates) — the reverse order would let
-                # the filter block re-discovery while the log lost the
-                # urls forever (ADVICE r1)
-                discovered_t.append(seeds_df.select("url"))
-                seen.filter_and_add(seeds_df.select("url"))
-            else:
-                seen.add(seeds_df.select("url"))
-        else:
-            discovered_t.append(seeds_df.select("url"))
+            seen.filter_and_add(seeds_df.select("url"))
         active_dirs = _stage_depth(seeds_df)
         staged_dirs = []
         round_no = 0
@@ -581,7 +546,7 @@ def run_crawl(
         current = spark.read.parquet(active_dirs[cur_offset])
         # round size, from parquet footers (driver-side, ~ms): drives the
         # scale-adaptive partition sizing below
-        cur_rows = _parquet_num_rows(active_dirs[cur_offset])
+        cur_rows = parquet_num_rows(active_dirs[cur_offset])
 
         # ---- fetch + route --------------------------------------------
         if live:
@@ -735,17 +700,13 @@ def run_crawl(
                 "host", host_of(F.col("url"))
             )
             if dedup_contacts:
-                # cache: the membership test against the whole seen set
-                # is the priciest per-round op — evaluate it once, not
-                # per action
+                # crash-safe two-phase in ONE pass: the staged insert is
+                # committed only after the frontier commit below. cache:
+                # the rows of the novel urls feed the delta write and the
+                # post-commit log append
                 deduped = discovered.dropDuplicates(["url"])
-                if approx_seen:
-                    # crash-safe two-phase in ONE pass: the staged insert
-                    # is committed only after the frontier commit below
-                    novel, commit_seen = seen.stage(deduped.select("url"))
-                    discovered = deduped.join(novel, "url", "left_semi").cache()
-                else:
-                    discovered = seen.filter_new(deduped).cache()
+                novel, commit_seen = seen.stage(deduped.select("url"))
+                discovered = deduped.join(novel, "url", "left_semi").cache()
             else:
                 # parity mode never READS the seen set mid-crawl (F5: no
                 # contact dedup), so discoveries go to an append-only log
@@ -771,7 +732,7 @@ def run_crawl(
             # the count is also discovered's row count below. An empty
             # delta dir is uncommitted, so removing it leaves no orphan.
             path = frontier_t.write_data(next_depth)
-            n_next = _parquet_num_rows(path)
+            n_next = parquet_num_rows(path)
             if n_next > 0:
                 staged_dirs.append(path)
             else:
@@ -792,23 +753,18 @@ def run_crawl(
             },
         )
         if discovers and dedup_contacts:
-            # seen-set insert AFTER the frontier commit: a crash between
+            # seen-set commit AFTER the frontier commit: a crash between
             # the two re-fetches at most one round's discoveries on
-            # resume (at-least-once) instead of silently LOSING them
-            # (filter_new would have dropped a replayed round's own
-            # discoveries had they been committed first)
+            # resume (at-least-once) instead of silently LOSING them (a
+            # replayed round's own discoveries would test as seen had
+            # they been committed first)
             if n_next > 0:
-                if approx_seen:
-                    # log append BEFORE the filter commit: once the filter
-                    # holds a url it blocks re-discovery, so a crash in
-                    # between must leave the url already in the log
-                    # (append is idempotent under the final
-                    # dropDuplicates; ADVICE r1 — the old order silently
-                    # dropped a crashed round's discoveries from url_seen)
-                    discovered_t.append(discovered.select("url"))
-                    commit_seen()
-                else:
-                    seen.add(discovered.select("url"))
+                # log append BEFORE the seen commit: once the seen set
+                # holds a url it blocks re-discovery, so a crash in
+                # between must leave the url already in the log (append
+                # is idempotent under the final dropDuplicates; ADVICE r1)
+                discovered_t.append(discovered.select("url"))
+                commit_seen()
             discovered.unpersist()
         round_no += 1
         active_dirs = remaining
@@ -828,16 +784,14 @@ def run_crawl(
         futs.append(pool.submit(seen.compact))
         for f in futs:
             f.result()
-    if expire_history:
-        # reclaim expired history + its data dirs (Iceberg
-        # expire_snapshots analog): every returned DataFrame reads a
-        # CURRENT snapshot and the frontier's visible resume tag is
-        # preserved, so nothing observable changes — only disk. At
-        # hundreds of politeness rounds the consumed round dirs are the
-        # dominant leftover storage.
-        for t in (frontier_t, log_t, extracted_t, discovered_t,
-                  images_t, records_t, robots_t, seen.table):
-            t.expire_snapshots(keep_last=1)
+    # reclaim expired history + its data dirs (Iceberg expire_snapshots
+    # analog): every returned DataFrame reads a CURRENT snapshot and the
+    # frontier's visible resume tag is preserved, so nothing observable
+    # changes — only disk. At hundreds of politeness rounds the consumed
+    # round dirs are the dominant leftover storage.
+    for t in (frontier_t, log_t, extracted_t, discovered_t,
+              images_t, records_t, robots_t, seen.table):
+        t.expire_snapshots(keep_last=1)
 
     # ---- one-shot records MERGE over the full extracted log ------------
     all_extracted = extracted_t.read()
@@ -906,16 +860,13 @@ def run_crawl(
     metrics_df = log_df.groupBy("round", "depth", "partition_id").agg(
         F.count("*").alias("attempted"), F.sum("ok").alias("ok")
     )
-    if dedup_contacts and not approx_seen:
-        url_seen_df = seen.snapshot_urls()
-    else:
-        # parity mode and approx modes enumerate from the discovered log
-        # (a Bloom/Cuckoo filter cannot list its members)
-        d = discovered_t.read()
-        url_seen_df = (
-            d.dropDuplicates(["url"]) if d is not None
-            else spark.createDataFrame([], "url string")
-        )
+    # every mode enumerates url_seen from the discovered log (a
+    # Bloom/Cuckoo filter cannot list its members)
+    d = discovered_t.read()
+    url_seen_df = (
+        d.dropDuplicates(["url"]) if d is not None
+        else spark.createDataFrame([], "url string")
+    )
     return CrawlResult(
         crawl_log=log_df.select("round", "depth", "seed_idx", "url"),
         url_seen=url_seen_df,

@@ -230,8 +230,9 @@ class SnapshotTable:
         analogue is rewrite_data_files). Call between crawl epochs.
         ``dedup_cols``: logical-key columns to dropDuplicates on during
         the rewrite — for append-only tables whose appends are idempotent
-        by key (e.g. the URL-seen table, re-appended on every resume),
-        compaction is where the duplicates actually collapse."""
+        by key (e.g. the URL-seen table, where passes staged against the
+        same state can each add a url), compaction is where the
+        duplicates actually collapse."""
         dirs = self._current_dirs()
         if not dirs:
             return
@@ -248,6 +249,19 @@ class SnapshotTable:
         path = self._new_data_dir()
         df.write.mode("overwrite").parquet(path)
         self._commit([path], None, manifest)
+
+
+def parquet_num_rows(path: str) -> int:
+    """Total row count of a just-written parquet dir from file footers —
+    a driver-side metadata read (no Spark job)."""
+    import pathlib
+
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f in pathlib.Path(path).glob("*.parquet"):
+        total += pq.ParquetFile(str(f)).metadata.num_rows
+    return total
 
 
 def merge_company_records(
